@@ -179,8 +179,7 @@ GATE_VARS = ("SPARK_GRAFT_SEMI_BUILD_KEYSET",
              "SPARK_GRAFT_SINGLE_REL_MAGIC",
              "SPARK_GRAFT_EAGER_AGG",
              "SPARK_GRAFT_IN_KEYSET_REDUCTION",
-             "SPARK_GRAFT_NEQ_EXISTS_AGG",
-             "SPARK_GRAFT_NEQ_EXISTS_WINDOW")
+             "SPARK_GRAFT_NEQ_EXISTS_COLLAPSE")
 
 
 @given(
@@ -205,20 +204,32 @@ def test_random_quantified_forced_gates_match_duckdb(engine, ddb, q, op,
 
 
 @given(
-    neg=st.booleans(),
-    local=st.sampled_from(["l2.l_quantity > 25", "l2.l_linenumber = 1",
-                           "l2.l_returnflag = 'R'"]),
+    pin=st.sampled_from(["l_returnflag = 'R'", "l_linestatus = 'F'",
+                         "l_quantity > 25", "l_linenumber <= 2"]),
+    pos=st.sampled_from([None, "l_quantity > 25", "l_linenumber = 1",
+                         "l_returnflag = 'R'", "l_linestatus <> 'O'"]),
+    extra=st.sampled_from([None, "l_discount > 0.05", "l_tax < 0.04"]),
 )
 @FUZZ
-def test_random_neq_exists_window_matches_duckdb(engine, ddb, neg, local):
-    # the r12 self-table window rewrite, forced, against DuckDB — random
-    # local inner filters become conditional window aggregates
-    kw = "NOT EXISTS" if neg else "EXISTS"
-    sql = (f"SELECT count(*) AS n FROM lineitem l1 "
-           f"WHERE l1.l_orderkey < 3000 AND {kw} "
+def test_random_neq_exists_collapse_matches_duckdb(engine, ddb, pin, pos,
+                                                   extra):
+    # q21-shaped two-member queries with random local predicates, the
+    # pinned group collapse forced, against DuckDB: the NOT EXISTS local
+    # (pin) is implied by the outer fact filters, which may be stricter
+    # (extra); the EXISTS member carries its own random local (pos)
+    outer = f"l1.{pin}" + (f" AND l1.{extra}" if extra else "")
+    pos_local = f" AND l2.{pos}" if pos else ""
+    sql = (f"SELECT s_name, count(*) AS numwait FROM supplier s "
+           f"JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey "
+           f"WHERE {outer} AND EXISTS "
            f"(SELECT 1 FROM lineitem l2 WHERE l2.l_orderkey = l1.l_orderkey "
-           f"AND l2.l_suppkey <> l1.l_suppkey AND {local})")
-    with _forced_env(SPARK_GRAFT_NEQ_EXISTS_WINDOW="1"):
-        actual = engine.query(sql).toPandas()
+           f"AND l2.l_suppkey <> l1.l_suppkey{pos_local}) AND NOT EXISTS "
+           f"(SELECT 1 FROM lineitem l3 WHERE l3.l_orderkey = l1.l_orderkey "
+           f"AND l3.l_suppkey <> l1.l_suppkey AND l3.{pin}) "
+           f"GROUP BY s_name")
+    with _forced_env(SPARK_GRAFT_NEQ_EXISTS_COLLAPSE="1"):
+        df = engine.query(sql)
+        assert "__nxc_" in df._jdf.queryExecution().optimizedPlan().toString()
+        actual = df.toPandas()
     expected = ddb.execute(sql).fetchdf()
     compare_frames(actual, expected)
